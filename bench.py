@@ -86,12 +86,13 @@ def _gate_params(query: str) -> tuple[float, float]:
 
 # Mart-build gate (r10 verdict item 4): the untimed side_table_build phase
 # must not silently absorb timed work or drift. Per-mart attribution spans
-# are measured under wave concurrency (a span includes scheduler waits while
-# wave-mates share the cores), so their clean-run spread is far wider than a
-# query's min-of-reps — the 5 s floor keeps the 2x threshold from flagging
-# that structural noise while still catching a relocated query (the r10
-# span/image relocation moved ~13 s into this phase — exactly the size this
-# floor passes through to the threshold check).
+# are measured while marts build concurrently (a span includes scheduler
+# waits while other builds share the cores), so their clean-run spread is
+# far wider than a query's min-of-reps — the 5 s floor keeps the 2x
+# threshold from flagging that structural noise while still catching a
+# relocated query (the r10 span/image relocation moved ~13 s into this
+# phase — exactly the size this floor passes through to the threshold
+# check).
 _MART_THRESHOLD = 2.0
 _MART_FLOOR = 5.0
 MART_ADJUDICATIONS: dict[str, str] = {}

@@ -86,10 +86,17 @@ def _silence_accumulator_gc_spam(spark: SparkSession) -> None:
     ("Failed to update accumulator N ... attempted to access non-existent
     accumulator") per such completion — rc=0, results unaffected, but the
     spam buries real errors in a captured stderr tail (r10 verdict item
-    8). Attach a DENY RegexFilter for exactly that message to the
-    DAGScheduler logger — narrower than restoring eager checkpoints
-    (which re-adds one scheduled job per CC round) or muting the logger
-    class. Best-effort: any log4j2 API drift leaves logging untouched."""
+    8). Attach a DENY RegexFilter to the DAGScheduler logger — narrower
+    than restoring eager checkpoints (which re-adds one scheduled job per
+    CC round) or muting the logger class.
+
+    The filter is broader than the benign class: it mutes EVERY "Failed to
+    update accumulator" message from the DAGScheduler for the session's
+    lifetime, a real accumulator or SQL-metric update failure included.
+    RegexFilter sees only the formatted message, and the text that marks
+    the benign case ("non-existent accumulator") sits in the attached
+    throwable, which it cannot match. Best-effort: any log4j2 API drift
+    leaves logging untouched."""
     try:
         jvm = spark.sparkContext._jvm
         result = jvm.org.apache.logging.log4j.core.Filter.Result

@@ -17,7 +17,6 @@ Mapping of reference tables → testdata (FIXTURES.md §2):
 
 from __future__ import annotations
 
-import hashlib
 import os
 import threading
 from collections.abc import Callable
@@ -811,9 +810,10 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (b) ALL 27 rows whose committed evidence is still r05-age, so after the
 # r11 run no row's evidence predates r06 (the r10 verdict's #10
 # done-criterion); (c) the 15 alphabetically-first r06-age rows fill the
-# window to 50. Every row is selfcheck-green at sf0.001/0.01 this round
-# (SELFCHECK_r11.json is the standing full-catalog record); rotated-out
-# greens stay protected by selfcheck+pytest.
+# window to 50. Every row is selfcheck-green at sf0.001/0.01
+# (SELFCHECK_r12.json, a --hostile run at sf0.01, is the standing
+# full-catalog record); rotated-out greens stay protected by
+# selfcheck+pytest.
 # --------------------------------------------------------------------------
 _DRIVER_PRIORITY = [
     # (a) changed-plan / adjudicated r11 rows
@@ -2294,104 +2294,54 @@ def _side_lock(key: tuple[str, str, str]) -> "threading.Lock":
 
 
 def _side_table(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    # abspath: the on-disk mart path is keyed by os.path.abspath(sf_dir), so
-    # the memo key must be too — two spellings of one directory (relative vs
-    # absolute, trailing slash) would otherwise create two memo entries that
-    # both overwrite the SAME parquet path while the first read-back frame
-    # still points at it (r10 ADVICE item 1).
+    # abspath: two spellings of one directory (relative vs absolute,
+    # trailing slash) must share one mart, not build it twice; the sf_dir
+    # part keeps marts of two SFs in one session apart
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
     if key not in _SIDE_TABLES:
         # per-key lock: warm_side_tables builds marts from a thread pool and
-        # several wave-mates read the same upstream mart (all three centroid
-        # trainings consume embeddings_dvec) — without the lock each racer
-        # would persist its own copy of the build
+        # several marts read the same upstream mart (all three centroid
+        # trainings consume embeddings_dvec) — the first caller builds it,
+        # the rest wait on the lock instead of building their own copy
         with _side_lock(key):
             if key not in _SIDE_TABLES:
-                _SIDE_TABLES[key] = _materialize_mart(spark, build(), name, sf_dir)
+                _SIDE_TABLES[key] = _materialize_mart(build())
     return _SIDE_TABLES[key]
 
 
-def _materialize_mart(
-    spark: SparkSession, df: DataFrame, name: str, sf_dir: str
-) -> DataFrame:
-    """Materialize a side mart ONCE and hand every consumer a LEAF-scan
-    DataFrame over the materialized files — the literal "persisted table
-    keyed by corpus version" shape these marts model at scale.
+def _materialize_mart(df: DataFrame) -> DataFrame:
+    """Materialize a side mart ONCE as an in-memory session checkpoint and
+    hand every consumer a leaf ``LogicalRDD`` plan over it.
 
-    The previous ``persist() + count()`` kept execution cheap but left every
-    consumer's LOGICAL plan carrying the full build lineage (the ivfadc rows
-    analyzed 200+-Exchange trees per invocation: plan canonicalization for
-    the cache lookup + optimizer passes over the dead lineage cost ~1 s of
-    pure driver time per rep — guide §3.3/§7.3, "very large plans: planning
-    time itself becomes the bottleneck; materialise an intermediate to
-    truncate the plan"). Writing the mart to session scratch parquet and
-    reading it back makes each consumer plan start at a file scan.
+    A leaf plan matters: a consumer that carries the full build lineage
+    re-plans it on every invocation (the ivfadc rows analyzed 200+-Exchange
+    trees, ~1 s of driver time per rep — "very large plans: planning time
+    itself becomes the bottleneck; materialise an intermediate to truncate
+    the plan").
 
-    The read-back passes the build's schema explicitly, so empty marts and
-    exact nullability/NTZ round-trip; parquet stores doubles/longs/arrays
-    bit-exactly, so results are unchanged. Falls back to persist() for any
-    frame parquet cannot carry (e.g. a NullType column).
+    The four steps, in this order:
+    - ``persist()`` + ``count()`` fill a cache, so the optimizer's size
+      statistic for the frame becomes the cached bytes. A bare
+      ``localCheckpoint`` keeps the build plan's estimate instead
+      (~1e127 bytes for near_dup_components, whose real size is 3 KB),
+      and consumers then pick sort-merge joins where a broadcast belongs.
+    - ``repartition(defaultParallelism)`` when the cache is narrower than
+      the session: a mart read from one split runs every consumer's
+      join/probe stage on one core (simhash_near_pairs doubled at sf0.1).
+    - ``localCheckpoint(eager=True)`` cuts the lineage; its statistic is
+      taken from the cached plan, i.e. the real size.
+    - ``unpersist()`` drops the cache; the checkpoint keeps its own blocks.
 
-    The read-back is re-widened and persist()-ed: a freshly written mart
-    is a handful of small files, so the scan packs into ONE input split
-    (openCostInBytes swamps the tiny files) and every consumer's
-    join/probe stage would run single-core — the leaf-scan-only variant
-    doubled simhash_near_pairs (0.55 -> 1.12 s, bisected to exactly this:
-    the banded self-join's probe side inherited the cache's 1 partition,
-    where the pre-parquet cached build carried its shuffle's 32).
-    Repartitioning once at build time (billed to side_table_build, like
-    an ingest choosing its write layout) and persisting hands consumers a
-    tiny logical plan, full parallelism, AND cache-speed repeated reads;
-    MEMORY_AND_DISK spills gracefully if marts outgrow storage memory."""
-    # The on-disk path must carry the SF-dir identity like the memo key
-    # does: a session that touches two sf_dirs (the 10x stress battery, a
-    # driver harness sweeping SFs) would otherwise have the second build
-    # OVERWRITE the first's files while the first's read-back frames still
-    # point at them — caught by the stress run reading sf1-sized marts for
-    # the sf0.1 measurement.
-    sf_tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(_session_mart_root(spark), sf_tag, name)
-    try:
-        df.write.mode("overwrite").parquet(path)
-    except Exception:
-        kept = df.persist()
-        kept.count()  # materialize eagerly so callers never re-run the lineage
-        return kept
-    scan = spark.read.schema(df.schema).parquet(path)
-    target = spark.sparkContext.defaultParallelism
-    if scan.rdd.getNumPartitions() < target:
-        scan = scan.repartition(target)
-    kept = scan.persist()
-    # Eager fill (r10 ADVICE item 2): persist() is lazy, so the cache fill
-    # (read-back + re-widen shuffle) would otherwise be paid by each mart's
-    # FIRST CONSUMER action — billed to an arbitrary query instead of
-    # side_table_build, contradicting the documented attribution.
-    kept.count()
-    return kept
-
-
-def _session_mart_root(spark: SparkSession) -> str:
-    """Session-scoped scratch root for materialized side marts (removed at
-    interpreter exit; /dev/shm or $SPARK_GRAFT_SCRATCH, like _scratch_dir)."""
-    root = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if root is None and os.path.isdir("/dev/shm"):
-        root = "/dev/shm/spark-graft-scratch"
-    if root is None:
-        import tempfile as _tf
-
-        root = _tf.gettempdir()
-    mart_root = os.path.join(root, f"marts-{spark.sparkContext.applicationId}")
-    if mart_root not in _MART_ROOTS_CLEANUP:
-        import atexit
-        import shutil as _shutil
-
-        _MART_ROOTS_CLEANUP.add(mart_root)
-        atexit.register(_shutil.rmtree, mart_root, ignore_errors=True)
-    os.makedirs(mart_root, exist_ok=True)
-    return mart_root
-
-
-_MART_ROOTS_CLEANUP: set[str] = set()
+    Trade-off: a local checkpoint lives in executor block managers and dies
+    with its executor. That is exact in local mode; on a cluster with a
+    checkpoint dir set, ``checkpoint()`` is the durable equivalent."""
+    df.persist()
+    df.count()
+    target = df.sparkSession.sparkContext.defaultParallelism
+    wide = df if df.rdd.getNumPartitions() >= target else df.repartition(target)
+    mart = wide.localCheckpoint(eager=True)
+    df.unpersist()
+    return mart
 
 
 def _band_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12920,62 +12870,53 @@ def bloom_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def warm_side_tables(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     """Materialize every shared per-(session, sf_dir) side-table mart.
     Returns {mart_name: build_seconds, "__wall": total}; all subsequent
-    catalog queries read the persisted tables.
+    catalog queries read the checkpointed marts.
 
-    Independent marts build CONCURRENTLY in dependency waves (Spark's FIFO
-    scheduler interleaves the jobs across idle cores — exactly how a real
-    ingest submits them), so wall time is well under the per-mart sum;
-    per-mart seconds remain each build's own span for attribution. Wave 2+
-    entries wait on wave-1 marts they read (verified pairs need band keys,
-    components need verified pairs, assignments need centroids, codes need
-    codebooks)."""
+    The marts build CONCURRENTLY on one pool of defaultParallelism threads
+    (Spark's FIFO scheduler interleaves the jobs across idle cores — how a
+    real ingest submits them), so wall time is well under the per-mart sum;
+    per-mart seconds remain each build's own span for attribution. No
+    dependency order is kept here: a mart that reads another (verified
+    pairs read band keys, components read verified pairs, assignments read
+    centroids, codes read codebooks) builds it through _side_table, whose
+    per-key lock makes every other reader wait for that one build."""
     import time as _time
     from concurrent.futures import ThreadPoolExecutor
 
-    waves: list[list[tuple[str, Callable[[], object]]]] = [
-        [
-            # the shared parsed-vector frame: the three centroid trainings
-            # and PQ all consume it; _side_table's per-key lock makes the
-            # first consumer build it and the rest wait (no duplicate work,
-            # no extra wave serializing the session warmup)
-            ("embeddings_dvec", lambda: _emb_dvec(spark, sf_dir)),
-            ("winnow_fingerprints", lambda: _winnow_fps(spark, sf_dir)),
-            ("minhash_band_keys", lambda: _band_keys(spark, sf_dir)),
-            ("simhash32", lambda: _simhash_sigs(spark, sf_dir)),
-            ("embedding_lsh_pairs", lambda: _emb_pairs(spark, sf_dir)),
-            ("lang_trigram_profiles", lambda: _lang_profiles(spark, sf_dir)),
-            ("kmeans_centroids", lambda: _kmeans_centroids(spark, sf_dir)),
-            ("ivf_search_centroids", lambda: _ivf_search_centroids(spark, sf_dir)),
-            ("ivf_delta_centroids", lambda: _ivf_delta_centroids(spark, sf_dir)),
-            ("bitext_centroids_p0", lambda: _bitext_centroids(spark, sf_dir, 0)),
-            ("bitext_centroids_p1", lambda: _bitext_centroids(spark, sf_dir, 1)),
-            ("bitext_centroids_m3a", lambda: _bitext_centroids_for(
-                spark, sf_dir, "m3a", F.col("_vid") % 3 == 0)),
-            ("bitext_centroids_m3b", lambda: _bitext_centroids_for(
-                spark, sf_dir, "m3b", F.col("_vid") % 3 != 0)),
-            ("pq_codebooks", lambda: _pq_codebooks(spark, sf_dir)),
-            ("bpe_merges", lambda: _bpe_merge_list(spark, sf_dir)),
-            ("trigram_lm", lambda: _trigram_lm(spark, sf_dir)),
-            ("copurchase_edges", lambda: _copurchase_edges(spark, sf_dir)),
-            ("image_dhash_mixed", lambda: _dhash_mart(spark, sf_dir)),
-            ("span_gram_matches", lambda: _span_matches(spark, sf_dir)),
-        ],
-        [
-            ("near_dup_verified_pairs", lambda: _verified_pairs(spark, sf_dir)),
-            ("kmeans_assignment", lambda: _kmeans_assignment(spark, sf_dir)),
-            ("ivf_search_lists", lambda: _ivf_search_lists(spark, sf_dir)),
-            ("bitext_lists_p0", lambda: _bitext_lists(spark, sf_dir, 0)),
-            ("bitext_lists_p1", lambda: _bitext_lists(spark, sf_dir, 1)),
-            ("bitext_lists_m3a", lambda: _bitext_lists_for(
-                spark, sf_dir, "m3a", F.col("_vid") % 3 == 0)),
-            ("bitext_lists_m3b", lambda: _bitext_lists_for(
-                spark, sf_dir, "m3b", F.col("_vid") % 3 != 0)),
-            ("pq_codes", lambda: _pq_codes(spark, sf_dir)),
-        ],
-        [
-            ("near_dup_components", lambda: _components(spark, sf_dir)),
-            ("image_components", lambda: _image_components(spark, sf_dir)),
-        ],
+    marts: list[tuple[str, Callable[[], object]]] = [
+        ("embeddings_dvec", lambda: _emb_dvec(spark, sf_dir)),
+        ("winnow_fingerprints", lambda: _winnow_fps(spark, sf_dir)),
+        ("minhash_band_keys", lambda: _band_keys(spark, sf_dir)),
+        ("simhash32", lambda: _simhash_sigs(spark, sf_dir)),
+        ("embedding_lsh_pairs", lambda: _emb_pairs(spark, sf_dir)),
+        ("lang_trigram_profiles", lambda: _lang_profiles(spark, sf_dir)),
+        ("kmeans_centroids", lambda: _kmeans_centroids(spark, sf_dir)),
+        ("ivf_search_centroids", lambda: _ivf_search_centroids(spark, sf_dir)),
+        ("ivf_delta_centroids", lambda: _ivf_delta_centroids(spark, sf_dir)),
+        ("bitext_centroids_p0", lambda: _bitext_centroids(spark, sf_dir, 0)),
+        ("bitext_centroids_p1", lambda: _bitext_centroids(spark, sf_dir, 1)),
+        ("bitext_centroids_m3a", lambda: _bitext_centroids_for(
+            spark, sf_dir, "m3a", F.col("_vid") % 3 == 0)),
+        ("bitext_centroids_m3b", lambda: _bitext_centroids_for(
+            spark, sf_dir, "m3b", F.col("_vid") % 3 != 0)),
+        ("pq_codebooks", lambda: _pq_codebooks(spark, sf_dir)),
+        ("bpe_merges", lambda: _bpe_merge_list(spark, sf_dir)),
+        ("trigram_lm", lambda: _trigram_lm(spark, sf_dir)),
+        ("copurchase_edges", lambda: _copurchase_edges(spark, sf_dir)),
+        ("image_dhash_mixed", lambda: _dhash_mart(spark, sf_dir)),
+        ("span_gram_matches", lambda: _span_matches(spark, sf_dir)),
+        ("near_dup_verified_pairs", lambda: _verified_pairs(spark, sf_dir)),
+        ("kmeans_assignment", lambda: _kmeans_assignment(spark, sf_dir)),
+        ("ivf_search_lists", lambda: _ivf_search_lists(spark, sf_dir)),
+        ("bitext_lists_p0", lambda: _bitext_lists(spark, sf_dir, 0)),
+        ("bitext_lists_p1", lambda: _bitext_lists(spark, sf_dir, 1)),
+        ("bitext_lists_m3a", lambda: _bitext_lists_for(
+            spark, sf_dir, "m3a", F.col("_vid") % 3 == 0)),
+        ("bitext_lists_m3b", lambda: _bitext_lists_for(
+            spark, sf_dir, "m3b", F.col("_vid") % 3 != 0)),
+        ("pq_codes", lambda: _pq_codes(spark, sf_dir)),
+        ("near_dup_components", lambda: _components(spark, sf_dir)),
+        ("image_components", lambda: _image_components(spark, sf_dir)),
     ]
     timings: dict[str, float] = {}
     t_wall = _time.perf_counter()
@@ -12986,9 +12927,7 @@ def warm_side_tables(spark: SparkSession, sf_dir: str) -> dict[str, float]:
         fn()
         return name, round(_time.perf_counter() - t0, 3)
 
-    for wave in waves:
-        with ThreadPoolExecutor(max_workers=len(wave)) as pool:
-            for name, sec in pool.map(timed, wave):
-                timings[name] = sec
+    with ThreadPoolExecutor(max_workers=spark.sparkContext.defaultParallelism) as pool:
+        timings.update(pool.map(timed, marts))
     timings["__wall"] = round(_time.perf_counter() - t_wall, 3)
     return timings

@@ -2,9 +2,13 @@
 (BENCH_BASELINE.json) that bench.py's baseline gate compares every future
 run against (r7 verdict item 3).
 
-Refuses to pin a run that isn't clean: load gate must have PASSED and
+Refuses to pin a run that isn't clean: load gate must have PASSED,
 reps >= 3 (a 1-rep or loaded-host run would bake noise into the floor
-every later run is judged by).
+every later run is judged by), and the run's own baseline gate must not
+have failed (pinning it would ratchet an unadjudicated regression into
+that floor). A delta that is real and understood is adjudicated in
+bench.py's BASELINE_ADJUDICATIONS / MART_ADJUDICATIONS first; there is no
+override flag.
 
 Usage: python scripts/pin_bench_baseline.py ["note for the record"]
 """
@@ -28,6 +32,10 @@ def main() -> int:
     if detail.get("reps", 1) < 3:
         print(f"refusing to pin: reps={detail.get('reps')} < 3")
         return 1
+    gate_status = detail.get("baseline_gate", {}).get("status", "")
+    if gate_status.startswith("failed"):
+        print(f"refusing to pin: baseline gate {gate_status}")
+        return 1
     baseline = {
         "pinned_from": sys.argv[1] if len(sys.argv) > 1 else "clean run",
         "sf": detail.get("sf"),
@@ -38,8 +46,8 @@ def main() -> int:
         "queries": detail["queries"],
         # per-mart build pins (r10 verdict item 4): the untimed
         # side_table_build phase is gated like queries (2x with a 5 s
-        # floor — spans are measured under wave concurrency) so it cannot
-        # silently absorb timed work or drift between rounds.
+        # floor — spans are measured while marts build concurrently) so it
+        # cannot silently absorb timed work or drift between rounds.
         "marts": detail.get("side_table_build", {}).get("marts", {}),
         "side_table_build_wall": detail.get("side_table_build", {}).get("total"),
         # Adjudication record carried with the baseline so the next reader

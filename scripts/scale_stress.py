@@ -64,7 +64,20 @@ def build_session() -> SparkSession:
     )
 
 
-def synthesize(spark: SparkSession, out_dir: str, copies: int) -> None:
+def near_dup(df, i):
+    """Copy i > 0 of a document is the original plus a short suffix: every
+    copy is a planted near-duplicate of its original."""
+    if i == 0:
+        return df
+    return df.withColumn("text", F.concat(F.col("text"), F.lit(f" c{i}"))).withColumn(
+        "n_chars", F.length("text")
+    )
+
+
+def synthesize(spark: SparkSession, out_dir: str, copies: int, text_mutation=near_dup) -> None:
+    """Scale sf0.1 by ``copies``: facts are unioned with keys shifted per
+    copy, dims are copied untouched, and ``text_mutation(df, i)`` rewrites
+    copy i's document text."""
     os.makedirs(out_dir, exist_ok=True)
 
     def shifted_union(name: str, key_cols: list[str], mutate=None):
@@ -84,15 +97,7 @@ def synthesize(spark: SparkSession, out_dir: str, copies: int) -> None:
 
     shifted_union("lineitem", ["l_orderkey"])
     shifted_union("orders", ["o_orderkey"])
-
-    def near_dup(df, i):
-        if i == 0:
-            return df
-        return df.withColumn("text", F.concat(F.col("text"), F.lit(f" c{i}"))).withColumn(
-            "n_chars", F.length("text")
-        )
-
-    shifted_union("documents", ["doc_id"], mutate=near_dup)
+    shifted_union("documents", ["doc_id"], mutate=text_mutation)
     # events ×copies: event_id AND user_id shifted — per-user series depth
     # stays constant while user cardinality grows 10×, which is how event
     # volume actually scales; the window/as-of/sweep-line family must show

@@ -136,23 +136,18 @@ def test_tz_day_tracks_dst_offsets(spark):
 
 
 def test_side_marts_isolated_per_sf_dir(spark, tmp_path):
-    """One session touching TWO sf_dirs must keep their materialized side
-    marts independent: the scratch-parquet mart path used to key on
-    (applicationId, name) only, so the second SF's build OVERWROTE the
-    first's files while the first's read-back frames still pointed at them
-    (caught by the 10x stress battery reading sf1-sized marts for its
-    sf0.1 measurement)."""
-    import pyarrow as _pa
-    import pyarrow.parquet as _pq
-
+    """One session touching TWO sf_dirs must keep their side marts
+    independent: the memo key carries abspath(sf_dir), so each SF gets its
+    own mart (a session that swept SFs — the 10x stress battery — once read
+    sf1-sized marts for its sf0.1 measurement)."""
     from pipeline_etl_ecommerce_spark.testdata_queries import _side_table
 
     dirs = []
     for n_rows in (3, 7):
         d = tmp_path / f"sf_fake_{n_rows}"
         d.mkdir()
-        _pq.write_table(
-            _pa.table({"doc_id": _pa.array(list(range(n_rows)), _pa.int64())}),
+        pq.write_table(
+            pa.table({"doc_id": pa.array(list(range(n_rows)), pa.int64())}),
             str(d / "docs.parquet"),
         )
         dirs.append(str(d))
@@ -167,3 +162,76 @@ def test_side_marts_isolated_per_sf_dir(spark, tmp_path):
     assert b.count() == 7
     assert a.count() == 3
     assert _side_table(spark, dirs[0], "iso_probe", build(dirs[0])).count() == 3
+
+
+def test_side_mart_is_in_memory_leaf_with_real_size(spark, tmp_path, monkeypatch):
+    """The side-mart contract every consumer relies on: a leaf LogicalRDD
+    plan (no build lineage to re-plan per query), at least
+    defaultParallelism partitions (a one-split mart runs every consumer's
+    probe stage on one core), nothing written to the scratch root, and the
+    mart's REAL size as its statistic. The build below is estimated far
+    above the broadcast threshold but holds 50 rows; a checkpoint that kept
+    the estimate would turn the consumer's broadcast join into a sort-merge
+    join."""
+    from pipeline_etl_ecommerce_spark.testdata_queries import _side_table
+
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(scratch))
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+    def build():
+        df = spark.range(0, 50, 1, 1)
+        for _ in range(3):  # each equi-join multiplies the estimate; the data stays 50 rows
+            df = df.join(spark.range(0, 50, 1, 1), "id")
+        return df.coalesce(1)
+
+    assert build()._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > threshold
+    mart = _side_table(spark, str(tmp_path), "contract_probe", build)
+
+    assert mart._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+    assert mart.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    assert os.listdir(scratch) == []
+    consumer = spark.range(0, 1000, 1, 4).join(mart, "id", "left")
+    assert "BroadcastHashJoin" in consumer._jdf.queryExecution().executedPlan().toString()
+    assert consumer.count() == 1000
+
+
+def test_concurrent_side_table_asks_build_each_mart_once(spark, tmp_path):
+    """warm_side_tables runs dependent marts on one pool in no particular
+    order: the per-key lock must make every reader of a mart wait for its
+    one build. Eight threads (more than the session's cores) ask for a mart
+    and for one whose build reads it; each build runs exactly once."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pipeline_etl_ecommerce_spark.testdata_queries import _side_table
+
+    sf_dir = str(tmp_path)
+    calls = {"base": 0, "derived": 0}
+    guard = threading.Lock()
+
+    def base():
+        with guard:
+            calls["base"] += 1
+        return spark.range(0, 10, 1, 1)
+
+    def derived():
+        with guard:
+            calls["derived"] += 1
+        return _side_table(spark, sf_dir, "lock_base", base).filter(F.col("id") % 2 == 0)
+
+    asks = [("lock_derived", derived), ("lock_base", base)] * 4
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=len(asks)) as pool:
+            futures = [pool.submit(_side_table, spark, sf_dir, name, b) for name, b in asks]
+            marts = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert calls == {"base": 1, "derived": 1}
+    assert len({id(m) for m in marts[0::2]}) == 1
+    assert len({id(m) for m in marts[1::2]}) == 1
+    assert marts[0].count() == 5
